@@ -249,9 +249,29 @@ _DRIVER_VERIFIED: set[str] = {
 # Names that must lead the registry regardless of verification history
 # (regression re-checks of previously-failed/erred rows). Empty after r09:
 # c3_covariance_matrix — the sole red driver row across 8 rounds — passed
-# its engine-proof re-run (CORRECTNESS_r09.json hash-green), so there is
-# nothing left to re-prove.
-_HEAD: list[str] = []
+# its engine-proof re-run (CORRECTNESS_r09.json hash-green). Now holds the
+# table-format surface for re-proof: warehouse reads plan from per-dir
+# recorded schemas and read_iceberg_v2 builds its partition map from an
+# Arrow table, so every warehouse and iceberg_v2 query is re-proved
+# first.
+_HEAD: list[str] = [
+    # sources/warehouse.py (22)
+    "c6_metadata_snapshots", "c6_time_travel", "c6_compaction_rewrite",
+    "c6_merge_into_upsert", "c6_schema_evolution",
+    "a8_relocated_warehouse_scan", "c6_system_queries",
+    "c6_sort_order_clustering", "c6_file_skipping",
+    "c6_incremental_snapshot_read", "c6_write_audit_publish",
+    "c6_remove_orphan_files", "c6_zorder_clustering", "c6_named_refs",
+    "c6_row_level_delete_update", "c6_snapshot_diff_cdc",
+    "c6_partition_evolution", "c6_rollback_cherry_pick",
+    "c6_partitions_metadata", "c6_expire_snapshots_retention",
+    "c6_branch_fast_forward", "c6_merge_on_read_delete",
+    # sources/iceberg_v2.py (7)
+    "a7_iceberg_v2_spec_scan", "c6_iceberg_v2_equality_delete_export",
+    "c6_iceberg_v2_positional_delete_export", "c6_iceberg_v2_incremental_scan",
+    "c6_iceberg_v2_change_feed_consume", "c6_iceberg_v2_hidden_partitioning",
+    "c6_iceberg_v2_multi_field_spec",
+]
 
 # Within the driver-unverified block, run these FIRST. Empty after r07:
 # all 38 prior members came back fully green (folded into _DRIVER_VERIFIED

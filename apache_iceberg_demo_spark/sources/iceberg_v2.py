@@ -1721,9 +1721,12 @@ def read_iceberg_v2(
     (spec semantics — Iceberg never re-infers them from paths): ONE
     vectorized FileScan over every surviving file, with the per-file
     constants (partition values, data sequence number) broadcast-joined
-    against ``_metadata.file_path`` — the mapping is manifest-sized (one
-    row per FILE, ~100k rows at 100 TB), never data-sized; this is how a
-    DataSourceV2 reader populates identity-partition constants per split.
+    against ``_metadata.file_path``. The mapping is manifest-sized (one
+    row per FILE, ~100k rows at 100 TB), never data-sized, and is built
+    in Python as a typed Arrow table, so it plans as a
+    ``LocalTableScan`` and feeds the broadcast without a Spark job; this
+    is how a DataSourceV2 reader populates identity-partition constants
+    per split.
     Manifests under different partition specs union their fields by name
     (absent columns NULL-fill). ``where`` prunes files from manifest
     bounds/partition values BEFORE the scan. Equality deletes apply under
@@ -2051,22 +2054,31 @@ def read_iceberg_v2(
         # natively and every other type (date, timestamp, decimal, float,
         # boolean) as its hive STRING — declare those columns string here;
         # the typed projection casts them to the declared Iceberg type.
-        def _map_type(t: str) -> str:
-            return spark_type(t) if t in _PARTITION_AVRO else "string"
+        #
+        # Built as an Arrow table with explicit types: Spark plans it as a
+        # LocalTableScan (a list of Python rows becomes a
+        # pickled-row Scan ExistingRDD that runs a Spark job to feed the
+        # broadcast), and the explicit types keep all-NULL columns typed.
+        import pyarrow as pa
 
-        map_ddl = "`__file` string, `__seq` bigint" + "".join(
-            f", `{n}` {_map_type(t)}" for n, t in part_fields
-        )
+        _ARROW = {"int": pa.int32(), "long": pa.int64(), "double": pa.float64()}
         mapping = spark.createDataFrame(
-            [
-                (
-                    _uri_path_quote(_from_uri(u)),
-                    file_seqs[u],
-                    *[vals.get(n) for n, _ in part_fields],
-                )
-                for u, vals in file_parts.items()
-            ],
-            schema=map_ddl,
+            pa.table(
+                {
+                    "__file": pa.array(
+                        [_uri_path_quote(_from_uri(u)) for u in file_parts],
+                        pa.string(),
+                    ),
+                    "__seq": pa.array([file_seqs[u] for u in file_parts], pa.int64()),
+                    **{
+                        n: pa.array(
+                            [vals.get(n) for vals in file_parts.values()],
+                            _ARROW.get(t, pa.string()),
+                        )
+                        for n, t in part_fields
+                    },
+                }
+            )
         )
         # _metadata.file_path renders Hadoop-style (file:/p, single slash);
         # normalize both sides to plain paths before the join. __file stays

@@ -41,6 +41,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _hive_unescape(s: str) -> str:
@@ -255,6 +256,13 @@ class Warehouse:
         except OSError:
             pass  # raced with the displaced holder's own release
 
+    def _dir_tag(self, name: str, entry_path: str) -> str:
+        """The data dir (``snap-…`` name under ``data/``) a manifest path
+        lives in — the key of its ``dir_schemas`` record."""
+        data_root = os.path.join(self._table_dir(name), "data")
+        rel = os.path.relpath(self._abs_path(name, entry_path), data_root)
+        return rel.split(os.sep)[0]
+
     def _abs_path(self, name: str, entry_path: str) -> str:
         """Resolve a manifest path. Paths are stored RELATIVE to the table
         dir (A8: a moved/copied warehouse stays readable — the Iceberg
@@ -382,7 +390,12 @@ class Warehouse:
         parent: Optional[int],
         meta: Optional[dict],
         advance_current: bool = True,
+        dir_schema: Optional[dict] = None,
     ) -> dict:
+        """Append a snapshot to the log and store the metadata atomically.
+        ``dir_schema`` is the new data dir's schema record from
+        :meth:`_write_data`; it lands in ``meta["dir_schemas"]`` in the
+        same store as the snapshot that first references the dir."""
         snap_id = self._next_snap_id(meta, parent)
         if meta is None:
             meta = {
@@ -394,14 +407,16 @@ class Warehouse:
                 "field_map": {},
                 "snapshots": [],
             }
+        if dir_schema:
+            meta.setdefault("dir_schemas", {}).update(dir_schema)
         # Iceberg-style field ids: every schema column has a stable id;
         # columns new to the table (including RE-ADDED names after a drop —
         # the evolution mutators remove the old id first) get a fresh one, so
         # reads bind file data by identity, never by name collision.
         try:
-            from pyspark.sql.types import StructType as _St
-
-            col_names = [f.name for f in _St.fromJson(json.loads(schema_ddl)).fields]
+            col_names = [
+                f.name for f in StructType.fromJson(json.loads(schema_ddl)).fields
+            ]
         except (ValueError, KeyError, TypeError):
             col_names = None
         if col_names is not None:
@@ -499,7 +514,15 @@ class Warehouse:
         snap_tag: str,
         partition_by,
         shuffle: bool = True,
-    ) -> str:
+    ) -> tuple[list[dict], dict]:
+        """Write ``df`` as a new data dir ``data/<snap_tag>``. Returns the
+        dir's manifest entries and its schema record ``{snap_tag: schema
+        json}`` — the Spark schema of the written frame, partition columns
+        included — for :meth:`_commit` to store in ``dir_schemas``. Reads
+        hand that schema to the Parquet reader, so planning a scan of the
+        dir neither re-infers it from footers (one Spark job per dir) nor
+        re-infers partition column types from the pruned subset of
+        ``col=value`` dirs it lists (``k='007'`` read back as int 7)."""
         data_dir = os.path.join(self._table_dir(name), "data", snap_tag)
         pcols = self._pcols(partition_by)
         if pcols and shuffle:
@@ -546,7 +569,8 @@ class Warehouse:
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(data_dir)
-        return data_dir
+        files = self._manifest_for_dir(name, data_dir)
+        return files, ({snap_tag: df.schema.json()} if files else {})
 
     def _transform_prune(
         self, meta: dict, snap: dict, files: list[dict], where: str
@@ -784,13 +808,15 @@ class Warehouse:
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         # a pre-clustered frame (sort-order tables) must keep its range
         # layout — the hash repartition in _write_data would destroy it
-        data_dir = self._write_data(name, df, tag, partition_by, shuffle=not cluster_by)
-        files = self._manifest_for_dir(name, data_dir)
+        files, dir_schema = self._write_data(
+            name, df, tag, partition_by, shuffle=not cluster_by
+        )
         if meta is not None:
             meta["partition_by"] = partition_by
             meta["field_map"] = {}  # replace-wins: new physical layout
         snap = self._commit(
-            name, "replace", files, df.schema.json(), partition_by, parent, meta
+            name, "replace", files, df.schema.json(), partition_by, parent, meta,
+            dir_schema=dir_schema,
         )
         meta = self._load_meta(name)
         old_spec = meta.get("partition_spec")
@@ -842,8 +868,7 @@ class Warehouse:
             df, _ = self._apply_transform(df, spec)
         parent = meta["current_snapshot_id"] if _parent is None else _parent
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
-        data_dir = self._write_data(name, df, tag, meta.get("partition_by"))
-        files = self._manifest_for_dir(name, data_dir)
+        files, dir_schema = self._write_data(name, df, tag, meta.get("partition_by"))
         if _delta_out is not None:
             # hand the caller this append's OWN manifest delta: branch
             # re-chains need it, and deriving it later by diffing against
@@ -864,6 +889,7 @@ class Warehouse:
                     parent,
                     meta,
                     advance_current=_advance_current,
+                    dir_schema=dir_schema,
                 )
             except CommitConflictError:
                 if attempt == retries - 1:
@@ -1022,11 +1048,10 @@ class Warehouse:
         tag = f"snap-{self._next_snap_id(meta, parent):05d}-{uuid.uuid4().hex[:8]}"
         # write under the FULL spec (all partition columns), not just the
         # touch-tracking first field
-        data_dir = self._write_data(name, new_rows, tag, meta["partition_by"])
-        files = self._manifest_for_dir(name, data_dir)
+        files, dir_schema = self._write_data(name, new_rows, tag, meta["partition_by"])
         return self._commit(
             name, operation, carry + files, meta["schema"],
-            meta["partition_by"], parent, meta,
+            meta["partition_by"], parent, meta, dir_schema=dir_schema,
         )
 
     def delete_where(self, name: str, predicate: str) -> dict:
@@ -1046,10 +1071,10 @@ class Warehouse:
             meta2 = self._load_meta(name)
             parent = meta2["current_snapshot_id"]
             tag = f"snap-{self._next_snap_id(meta2, parent):05d}-{uuid.uuid4().hex[:8]}"
-            data_dir = self._write_data(name, target.filter(~cond), tag, None)
-            files = self._manifest_for_dir(name, data_dir)
+            files, dir_schema = self._write_data(name, target.filter(~cond), tag, None)
             return self._commit(
-                name, "delete", files, meta2["schema"], None, parent, meta2
+                name, "delete", files, meta2["schema"], None, parent, meta2,
+                dir_schema=dir_schema,
             )
         pv = self._pv_expr(part_col)
         touched = {
@@ -1137,10 +1162,12 @@ class Warehouse:
             meta2 = self._load_meta(name)
             parent = meta2["current_snapshot_id"]
             tag = f"snap-{self._next_snap_id(meta2, parent):05d}-{uuid.uuid4().hex[:8]}"
-            data_dir = self._write_data(name, updated_all.drop("_upd"), tag, None)
-            files = self._manifest_for_dir(name, data_dir)
+            files, dir_schema = self._write_data(
+                name, updated_all.drop("_upd"), tag, None
+            )
             return self._commit(
-                name, "update", files, meta2["schema"], None, parent, meta2
+                name, "update", files, meta2["schema"], None, parent, meta2,
+                dir_schema=dir_schema,
             )
         pv = self._pv_expr(part_col)
         old_parts = marked.filter("_upd").select(pv.alias("p"))
@@ -1465,13 +1492,16 @@ class Warehouse:
         # per-snapshot scans (plan-level concat, no shuffle). Scans may have
         # heterogeneous columns after schema evolution — union by name with
         # missing columns null-filled, then reconcile to the declared schema.
+        # One basePath over all of data/ would make a single FileScan, but
+        # Spark rejects it (CONFLICTING_DIRECTORY_STRUCTURES: the snap-* dir
+        # level is not a partition level).
         data_root = os.path.join(self._table_dir(name), "data")
         by_snap: dict[str, list[str]] = {}
         for f in files:
             path = self._abs_path(name, f["path"])
-            rel = os.path.relpath(path, data_root)
-            tag = rel.split(os.sep)[0]
-            by_snap.setdefault(os.path.join(data_root, tag), []).append(path)
+            by_snap.setdefault(
+                os.path.join(data_root, self._dir_tag(name, f["path"])), []
+            ).append(path)
         # field-id resolution (Iceberg semantics): a column binds to a file's
         # physical data only when the WRITING snapshot's schema carried the
         # same field id. This is what keeps a drop-then-re-add column NULL
@@ -1479,12 +1509,22 @@ class Warehouse:
         # the dropped values, and makes renames track identity, not names.
         target_fids = snap.get("fids")
         by_snap_id = {s["snapshot_id"]: s for s in meta.get("snapshots", [])}
+        dir_schemas = meta.get("dir_schemas", {})
         df = None
         for base, paths in sorted(by_snap.items()):
-            part = self.spark.read.option("basePath", base).parquet(*paths)
+            tag = os.path.basename(base)
+            reader = self.spark.read.option("basePath", base)
+            if tag in dir_schemas:
+                # the schema the dir was written with (_write_data): no
+                # footer-inference job at plan time, and partition columns
+                # keep their written type. Dirs committed before schemas
+                # were recorded fall back to inference + step 3's casts.
+                reader = reader.schema(
+                    StructType.fromJson(json.loads(dir_schemas[tag]))
+                )
+            part = reader.parquet(*paths)
             wfids = None
             if declared is not None and target_fids:
-                tag = os.path.basename(base)
                 try:
                     wsnap = by_snap_id.get(int(tag.rsplit("-", 1)[1]))
                 except (ValueError, IndexError):
@@ -1527,9 +1567,11 @@ class Warehouse:
         for field in declared.fields:
             if field.name not in df.columns:
                 df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-        # 3) partition-dir type inference must not override the declared
-        #    schema (the table schema is authoritative; a yyyy-MM-dd string
-        #    partition column stays a string — SURVEY.md §1.3)
+        # 3) the declared schema is authoritative (a yyyy-MM-dd string
+        #    partition column stays a string — SURVEY.md §1.3). Dirs read
+        #    with their recorded schema already match; this cast covers
+        #    dirs read through partition-type inference (no record), where
+        #    it cannot undo a lossy inference ('007' -> 7 -> '7')
         for field in declared.fields:
             got = dict(df.dtypes).get(field.name)
             if got is not None and got != field.dataType.simpleString():
@@ -1544,8 +1586,6 @@ class Warehouse:
 
     @staticmethod
     def _declared_schema(meta_or_snap: dict):
-        from pyspark.sql.types import StructType
-
         try:
             return StructType.fromJson(json.loads(meta_or_snap["schema"]))
         except (ValueError, KeyError, TypeError):
@@ -1742,6 +1782,8 @@ class Warehouse:
         # remove_orphan_files), never committed metadata that references
         # already-deleted files (broken time travel).
         meta["snapshots"] = keep
+        # the dirs deleted below lose their schema record in this commit
+        self._prune_dir_schemas(name, meta)
         self._store_meta(name, meta)
         removed = 0
         for s in expired:
@@ -1760,6 +1802,25 @@ class Warehouse:
                 ):
                     shutil.rmtree(full)
         return removed
+
+    def _live_dirs(self, name: str, meta: dict) -> set[str]:
+        """Data dirs some snapshot in ``meta`` references."""
+        return {
+            self._dir_tag(name, f["path"])
+            for s in meta["snapshots"]
+            for f in s["manifest"]
+        }
+
+    def _prune_dir_schemas(self, name: str, meta: dict) -> bool:
+        """Drop the ``dir_schemas`` records of data dirs no snapshot in
+        ``meta`` references any more. Returns whether any was dropped."""
+        recorded = meta.get("dir_schemas")
+        if not recorded:
+            return False
+        live = self._live_dirs(name, meta)
+        kept = {tag: sch for tag, sch in recorded.items() if tag in live}
+        meta["dir_schemas"] = kept
+        return len(kept) != len(recorded)
 
     def remove_orphan_files(self, name: str, min_age_s: float = 0.0) -> int:
         """Iceberg ``remove_orphan_files``: delete data files under the table
@@ -1794,6 +1855,22 @@ class Warehouse:
                 ):
                     os.remove(path)
                     removed += 1
+        # a data dir no snapshot references and no parquet file is left in
+        # (an aborted write's debris) goes too, with any schema record
+        referenced = self._live_dirs(name, meta)
+        for d in os.listdir(data_root) if os.path.isdir(data_root) else []:
+            full = os.path.join(data_root, d)
+            if (
+                d not in referenced
+                and os.path.isdir(full)
+                and os.path.getmtime(full) <= cutoff
+                and not any(
+                    fn.endswith(".parquet") for _, _, fs in os.walk(full) for fn in fs
+                )
+            ):
+                shutil.rmtree(full)
+        if self._prune_dir_schemas(name, meta):
+            self._store_meta(name, meta)
         return removed
 
     # ---------- schema evolution (C6) ----------

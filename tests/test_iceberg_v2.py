@@ -3619,3 +3619,28 @@ def test_positional_delete_on_special_char_partition_paths(spark, tmp_path):
     assert sorted(map(tuple, got.collect()), key=str) == sorted(
         map(tuple, wh.read("x").collect()), key=str
     )
+
+
+def test_partition_map_carries_null_timestamp_and_decimal_identities(spark, tmp_path):
+    """The read_iceberg_v2 partition map is an Arrow table whose
+    non-int/long/double partition columns are strings: timestamp and
+    decimal identity values (NULL included) must come back exactly, both
+    through the unpruned map and a pruned one."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    rows = spark.sql(
+        "SELECT id AS k, "
+        "CASE WHEN id = 3 THEN NULL ELSE TIMESTAMP'2024-01-01 12:30:00' "
+        "+ make_interval(0,0,0,CAST(id AS INT),0,0,0) END AS ts, "
+        "CASE WHEN id = 2 THEN NULL ELSE CAST(id * 1.5 AS DECIMAL(9,2)) END AS m "
+        "FROM range(0, 5)"
+    )
+    want = sorted(map(tuple, rows.collect()), key=str)
+    for col in ("ts", "m"):
+        wh.create_or_replace(col, rows, partition_by=col)
+        assert sorted(map(tuple, wh.read(col).collect()), key=str) == want
+        loc = export_iceberg_v2(wh, col, str(tmp_path / f"ice_{col}"))
+        got = read_iceberg_v2(spark, loc)
+        assert got.schema[col].dataType == rows.schema[col].dataType
+        assert sorted(map(tuple, got.select(*rows.columns).collect()), key=str) == want
+        pruned = read_iceberg_v2(spark, loc, where=f"{col} IS NULL")
+        assert [r.k for r in pruned.collect()] == [3 if col == "ts" else 2]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -1415,3 +1416,145 @@ def test_merge_after_spec_evolution_no_duplication(spark, tmp_path):
     a2 = wh.read("t")
     assert a2.filter(F.col("o_orderkey") == probe).count() == 1
     assert a2.count() == n1
+
+
+# ---------- per-dir schema records: planning without Spark jobs ----------
+
+
+@pytest.fixture()
+def plain_spark(spark):
+    """A session with Spark's default confs where the engine tunes them:
+    Arrow conversion and the tuned shuffle width are off (shares the
+    SparkContext)."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "200")
+    return s
+
+
+def _create_and_append_4(wh, li):
+    """Table ``t`` of ``li`` in 5 commits (5 data dirs): create with line
+    1, then one append each for lines 2, 3, 4 and >= 5."""
+    ln = F.col("l_linenumber")
+    wh.create_or_replace("t", li.filter(ln == 1), partition_by="ship_day")
+    for part in (ln == 2, ln == 3, ln == 4, ln >= 5):
+        wh.append("t", li.filter(part))
+
+
+def test_pruned_read_keeps_numeric_looking_string_partitions(spark, tmp_path):
+    """A pruned read lists only the matching ``k=value`` dirs. Inferring
+    the partition type from that subset read k='007' as int 7 (and '1e3'
+    as double 1000.0); the cast back to the declared string gave '7', so
+    the filter dropped the row. The recorded dir schema keeps the type."""
+    from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+        export_iceberg_v2,
+        read_iceberg_v2,
+    )
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    vals = ["007", "1e3", "-1", "2024-01-01", "plain"]
+    wh.create_or_replace(
+        "t",
+        spark.createDataFrame(list(enumerate(vals)), "i int, k string"),
+        partition_by="k",
+    )
+    want = sorted(enumerate(vals))
+    assert sorted(tuple(r) for r in wh.read("t").collect()) == want
+    loc = export_iceberg_v2(wh, "t", location=str(tmp_path / "v2"))
+    assert sorted(tuple(r) for r in read_iceberg_v2(spark, loc).collect()) == want
+    for i, v in enumerate(vals):
+        where = f"k = '{v}'"
+        assert [tuple(r) for r in wh.read("t", where=where).collect()] == [(i, v)]
+        assert [
+            tuple(r) for r in read_iceberg_v2(spark, loc, where=where).collect()
+        ] == [(i, v)]
+
+
+@pytest.mark.parametrize("plain", [False, True])
+def test_pruned_read_plans_without_spark_jobs(spark, plain_spark, tmp_path, plain):
+    """After create + 4 appends (5 data dirs), a pruned read plans from
+    the recorded dir schemas: no footer-inference job per dir before the
+    action, on the engine's session and on a default-conf session."""
+    s = plain_spark if plain else spark
+    wh = Warehouse(s, str(tmp_path / "wh"))
+    li = _lineitem(s).select("l_orderkey", "l_linenumber", "ship_day")
+    _create_and_append_4(wh, li)
+    month = li.select("ship_day").first()[0]
+    where = f"ship_day = '{month}'"
+    sc = s.sparkContext
+    sc.setJobGroup(f"plan-probe-{plain}", "planning probe")
+    try:
+        df = wh.read("t", where=where)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"plan-probe-{plain}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 0
+    assert df.count() == li.filter(where).count()
+
+
+def test_v2_partition_map_is_a_local_table_scan(spark, plain_spark, tmp_path):
+    """The (file, seq, partition) map of read_iceberg_v2 is built from a
+    typed Arrow table: it plans as a LocalTableScan, not a
+    pickled-row ExistingRDD scan, on both session shapes."""
+    from apache_iceberg_demo_spark.sources.iceberg_v2 import (
+        export_iceberg_v2,
+        read_iceberg_v2,
+    )
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.create_or_replace("t", _lineitem(spark).limit(200), partition_by="ship_day")
+    loc = export_iceberg_v2(wh, "t", location=str(tmp_path / "v2"))
+    for s in (spark, plain_spark):
+        plan = read_iceberg_v2(s, loc)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+
+
+def _data_dirs(wh, name):
+    return set(os.listdir(os.path.join(wh._table_dir(name), "data")))
+
+
+def test_dir_schemas_follow_the_live_data_dirs(spark, wh):
+    """Every committed data dir gets one schema record; expiry drops the
+    records of the dirs it deletes, and the orphan sweep drops a dir
+    (and any record) no snapshot references."""
+    li = _lineitem(spark).select("l_orderkey", "l_linenumber", "ship_day")
+    _create_and_append_4(wh, li)
+    assert set(wh._load_meta("t")["dir_schemas"]) == _data_dirs(wh, "t")
+    assert len(_data_dirs(wh, "t")) == 5
+    wh.rewrite_data_files("t")
+    wh.expire_snapshots("t", keep_last=1)
+    meta = wh._load_meta("t")
+    live = {wh._dir_tag("t", f["path"]) for f in meta["snapshots"][-1]["manifest"]}
+    assert len(live) == 1
+    assert set(meta["dir_schemas"]) == live == _data_dirs(wh, "t")
+    assert wh.read("t").count() == li.count()
+
+    # an aborted write's dir with a stale record: the sweep removes both
+    aborted = os.path.join(wh._table_dir("t"), "data", "snap-99999-aborted")
+    li.limit(5).write.parquet(aborted)
+    meta["dir_schemas"]["snap-99999-aborted"] = li.schema.json()
+    with open(wh._meta_path("t"), "w") as f:
+        json.dump(meta, f)
+    assert wh.remove_orphan_files("t") >= 1
+    assert not os.path.exists(aborted)
+    assert set(wh._load_meta("t")["dir_schemas"]) == live
+
+
+def test_reads_without_dir_schemas_fall_back_to_inference(spark, wh):
+    """Metadata written before dir schemas were recorded has no
+    ``dir_schemas`` key: reads infer each dir's schema as they always did
+    and return the same rows."""
+    li = _lineitem(spark).select("l_orderkey", "l_linenumber", "ship_day")
+    wh.create_or_replace("t", li.filter(F.col("l_linenumber") == 1), partition_by="ship_day")
+    wh.append("t", li.filter(F.col("l_linenumber") != 1))
+    month = li.select("ship_day").first()[0]
+    where = f"ship_day = '{month}'"
+    full, pruned = sorted(wh.read("t").collect()), sorted(wh.read("t", where=where).collect())
+    meta = wh._load_meta("t")
+    assert len(meta.pop("dir_schemas")) == 2
+    with open(wh._meta_path("t"), "w") as f:
+        json.dump(meta, f)
+    assert sorted(wh.read("t").collect()) == full
+    assert sorted(wh.read("t", where=where).collect()) == pruned
+    assert len(pruned) == li.filter(where).count()

@@ -9,6 +9,9 @@ Usage: python tools/read_equivalence_fuzzer.py [SEED] [N_TABLES] [N_PREDS]
 Round-14 sweeps: seeds 14/99/7/23/41, ~2500 predicate evaluations — the
 one failure (seed 7: `tag = ''` on a truncate-string table) became the
 empty-string fix set in tests/test_empty_string_partitions_r14.py.
+The numeric- and date-looking tag values ('007', '1e3', ...) pin the
+per-dir schema records: without them a pruned read re-inferred the
+partition column's type from the dirs it listed.
 """
 import os
 import random
@@ -44,7 +47,11 @@ from apache_iceberg_demo_spark.sources.iceberg_v2 import (
 wh = Warehouse(spark, os.path.join(ROOT, "wh"))
 
 TAGS = ["a b", "p%q", "café", "x=y", "plain", "4-NOT SPECIFIED", None,
-        "O'Brien", ""]
+        "O'Brien", "",
+        # numeric- and date-looking strings: a pruned read lists a subset
+        # of the tag=value dirs, and partition type inference over that
+        # subset alone reads '007' as int 7
+        "007", "0", "-1", "1e3", "2024-01-01"]
 BIG = 9007199254740992  # 2^53
 
 def make_rows(n):
